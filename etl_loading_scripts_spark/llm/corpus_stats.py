@@ -153,7 +153,10 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # many queries accumulates dead caches until the heap tips (a 351-
     # query sweep OOM'd exactly there); a localCheckpoint's blocks are
     # freed by the ContextCleaner as soon as the query's frames are
-    # dropped, with the same compute-once property.
+    # dropped, with the same compute-once property. The trade: local-
+    # checkpoint blocks are not replicated and their lineage is cut, so
+    # losing an executor fails the manifest query instead of
+    # recomputing it — accepted for a per-query table.
     shingled = _shingles_spark(docs).localCheckpoint()
 
     def scalar(name, df_agg):

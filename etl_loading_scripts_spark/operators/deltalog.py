@@ -61,7 +61,8 @@ Round 8 completes the lakehouse surface:
   readChangeFeed;
 - **Disjoint-commit OCC**: a month-grain version-race loser re-commits
   its staged actions without recomputing when the winner's months are
-  disjoint (:func:`_try_recommit_disjoint`);
+  disjoint (:func:`_recommit_if_disjoint`, which also applies the
+  keyed merge's key-band rule);
 - **commitInfo** on every commit + exact :func:`delta_history`;
 - **OPTIMIZE / Z-ORDER** (:func:`optimize_delta`): per-partition
   small-file bin-packing and Morton-curve clustering in one
@@ -1919,20 +1920,45 @@ def _align_to_schema(df: DataFrame, schema: StructType, context: str) -> DataFra
     return out
 
 
-def _occ_retry(fn, max_retries: int):
-    """Optimistic concurrency loop: a commit conflict re-runs ``fn``
+def _occ_retry(fn, max_retries: int, count_key: str | None = None):
+    """THE optimistic concurrency loop: a commit conflict re-runs ``fn``
     against the NEW snapshot — the losing writer's work is recomputed
     against the winner's state, exactly the semantics the real
-    protocol's retry loop gives idempotent operations. Raises after
-    ``max_retries`` genuine conflicts; every other error propagates."""
+    protocol's retry loop gives idempotent operations.
+
+    When ``fn`` IS one merge op — it returns that op's result dict, and
+    ``count_key`` names the key recording how many times ``fn`` ran
+    (1 = nobody raced, or the reconciliation worked) — a
+    :class:`DeltaCommitConflict` carrying a read-set predicate is first
+    RECONCILED (:func:`_recommit_if_disjoint`): when every winner is
+    disjoint from what the loser read, its staged actions re-commit
+    verbatim and ``fn`` does not run again. A composite ``fn`` (no
+    ``count_key``) that post-processes a nested merge's result always
+    recomputes: the conflict carries the merge's result, not ``fn``'s.
+    Raises after ``max_retries`` genuine conflicts; every other error
+    propagates."""
+    computations = 0
     last: RuntimeError | None = None
     for _ in range(max_retries + 1):
+        computations += 1
         try:
-            return fn()
+            out = fn()
         except RuntimeError as exc:
             if not _is_commit_conflict(exc):
                 raise
-            last = exc
+            out = (
+                _recommit_if_disjoint(exc)
+                if count_key is not None
+                and isinstance(exc, DeltaCommitConflict)
+                and exc.disjoint is not None
+                else None
+            )
+            if out is None:
+                last = exc  # overlapping: recompute on the new snapshot
+                continue
+        if count_key is not None:
+            out[count_key] = computations
+        return out
     raise RuntimeError(
         f"delta commit lost {max_retries + 1} optimistic-concurrency races"
     ) from last
@@ -2130,57 +2156,42 @@ def merge_cow_deltalog(
             raise
         # a racing writer took the version: surface everything the
         # retry layer needs to RECONCILE instead of recompute — the
-        # loser's read set (its months) and its already-staged actions
+        # loser's already-staged actions and its read set (its months)
+        def _month_disjoint(kind: str, body: dict) -> bool:
+            m = (
+                (body.get("partitionValues") or {}).get(MONTH_COL)
+                if kind == "add"
+                else _path_month(body["path"])
+            )
+            return m is not None and m not in month_strs
+
         raise DeltaCommitConflict(
-            table=table,
-            attempted_version=pinned + 1,
-            actions=actions,
-            read_months=month_strs,
-            result=result,
+            table, pinned + 1, actions, result, _month_disjoint
         ) from exc
     return result
 
 
 class DeltaCommitConflict(RuntimeError):
-    """A lost version race, carrying the loser's staged actions and
-    read set (the months it merged) so the retry layer can check the
-    winner's commit for DISJOINTNESS and re-commit without recomputing
-    the merge. Classified by :func:`_is_commit_conflict` (isinstance),
-    and str() keeps the exact ``delta commit conflict`` prefix so
-    message-based callers stay correct too."""
+    """A lost version race, carrying the loser's staged actions, its
+    would-be result and its READ SET as a predicate, so the retry layer
+    can check the winners for DISJOINTNESS and re-commit without
+    recomputing. ``disjoint(kind, body)`` gets each winner ``add`` /
+    ``remove`` action body and returns True only when that action
+    PROVABLY misses what the loser read (None = no proof possible:
+    always recompute). Classified by :func:`_is_commit_conflict`
+    (isinstance), and str() keeps the exact ``delta commit conflict``
+    prefix so message-based callers stay correct too."""
 
-    def __init__(
-        self,
-        table,
-        attempted_version,
-        actions,
-        read_months,
-        result,
-        key_band=None,
-        read_paths=None,
-        snapshot_key_ranges=None,
-        key_ctype=None,
-    ):
+    def __init__(self, table, attempted_version, actions, result, disjoint):
         super().__init__(
             f"delta commit conflict: version {attempted_version} already "
-            f"committed (months {sorted(read_months)})"
+            "committed"
         )
         self.table = table
         self.attempted_version = attempted_version
         self.actions = actions
-        self.read_months = set(read_months)
         self.result = result
-        # keyed-grain read set (r13, VERDICT r12 item 7): the loser's
-        # source key band (col, lo, hi), the paths its staged actions
-        # reference, and the pinned snapshot's per-file key ranges —
-        # what _try_recommit_disjoint_keys needs to prove a winner
-        # band-disjoint without recomputing the merge
-        self.key_band = key_band
-        self.read_paths = set(read_paths or ())
-        self.snapshot_key_ranges = dict(snapshot_key_ranges or {})
-        #: the key column's declared type — gates the timestamp
-        #: separator normalization in the band-disjoint proof
-        self.key_ctype = key_ctype
+        self.disjoint = disjoint
 
 
 def _path_month(path: str) -> str | None:
@@ -2194,17 +2205,19 @@ def _path_month(path: str) -> str | None:
     return None
 
 
-def _try_recommit_disjoint(conflict: DeltaCommitConflict, max_attempts: int = 5):
-    """The real protocol's conflict checker, month-grain: if EVERY
-    winning commit since the loser's snapshot touched only months
-    DISJOINT from the loser's read set (and changed no metadata), the
-    loser's staged remove+add+cdc actions are still valid verbatim —
-    re-commit them at the next version WITHOUT recomputing the merge.
-    Returns the updated result dict, or None when the commits overlap
-    (or can't be verified: expired JSON, metadata change, un-parseable
-    path) — the caller then falls back to full recompute."""
-    from etl_loading_scripts_spark.operators.cow import MONTH_COL
-
+def _recommit_if_disjoint(
+    conflict: DeltaCommitConflict, max_attempts: int = 5
+):
+    """The real protocol's conflict checker: if EVERY winning commit
+    since the loser's snapshot changed no metadata/protocol and each of
+    its add/remove actions passes the loser's read-set predicate
+    (``conflict.disjoint`` — months for merge_cow, the key band for
+    merge_dim), the loser's staged remove+add+cdc actions are still
+    valid verbatim — re-commit them at the next version WITHOUT
+    recomputing. Returns the updated result dict, or None when a winner
+    overlaps (or can't be verified: expired JSON, metadata change,
+    unknowable footprint) — the caller then falls back to full
+    recompute."""
     table = conflict.table
     for _ in range(max_attempts):
         latest = _all_versions(table)[-1]
@@ -2215,23 +2228,17 @@ def _try_recommit_disjoint(conflict: DeltaCommitConflict, max_attempts: int = 5)
             for a in _read_actions(table, v):
                 if "metaData" in a or "protocol" in a:
                     return None  # schema/protocol changed under us
-                if "add" in a:
-                    m = (a["add"].get("partitionValues") or {}).get(MONTH_COL)
-                elif "remove" in a:
-                    m = _path_month(a["remove"]["path"])
-                else:
-                    continue  # cdc/commitInfo: no read-set footprint
-                if m is None or m in conflict.read_months:
-                    return None  # overlapping (or unknowable) months
+                # cdc/commitInfo carry no read-set footprint
+                for kind in ("add", "remove"):
+                    if kind in a and not conflict.disjoint(kind, a[kind]):
+                        return None
         try:
             _commit(table, latest + 1, conflict.actions)
         except RuntimeError as exc:
             if not _is_commit_conflict(exc):
                 raise
             continue  # yet another winner: re-validate the new commits
-        out = dict(conflict.result)
-        out["version"] = latest + 1
-        return out
+        return {**conflict.result, "version": latest + 1}
     return None
 
 
@@ -2275,74 +2282,6 @@ def _add_key_range(add: dict, col: str):
     return tpv, tpv
 
 
-def _try_recommit_disjoint_keys(
-    conflict: DeltaCommitConflict, max_attempts: int = 5
-):
-    """Keyed-grain conflict checker (r13, VERDICT r12 item 7 — the
-    analogue of :func:`_try_recommit_disjoint`'s month rule): the
-    loser's keyed-merge classification (match/insert per source key)
-    depends only on rows inside its source KEY BAND, so if every
-    winning commit since the loser's snapshot is provably
-    band-disjoint, the staged actions are still valid verbatim.
-    Provably band-disjoint means, per winner commit: no metaData or
-    protocol action; every ADD's recorded key range misses the band
-    (statless adds are unknowable → recompute); every REMOVE's file
-    range — from the loser's pinned snapshot, or from a winner add
-    observed earlier in the walk — misses the band (a winner deleting
-    band rows would flip the loser's match/insert decisions); and no
-    winner action touches a path the loser's own actions reference.
-    Returns the updated result dict, or None → full recompute."""
-    if conflict.key_band is None:
-        return None
-    col, lo, hi = conflict.key_band
-    ctype = conflict.key_ctype
-    ranges = dict(conflict.snapshot_key_ranges)
-    refs = conflict.read_paths
-    table = conflict.table
-    for _ in range(max_attempts):
-        latest = _all_versions(table)[-1]
-        for v in range(conflict.attempted_version, latest + 1):
-            p = os.path.join(_log_path(table), f"{v:020d}.json")
-            if not os.path.exists(p):
-                return None  # can't inspect the winner: recompute
-            for a in _read_actions(table, v):
-                if "metaData" in a or "protocol" in a:
-                    return None
-                if "add" in a:
-                    path = a["add"]["path"]
-                    rng = _add_key_range(a["add"], col)
-                    if (
-                        path in refs
-                        or rng is None
-                        or not _range_disjoint(
-                            rng[0], rng[1], lo, hi, ctype
-                        )
-                    ):
-                        return None
-                    ranges[path] = rng
-                elif "remove" in a:
-                    path = a["remove"]["path"]
-                    rng = ranges.get(path)
-                    if (
-                        path in refs
-                        or rng is None
-                        or not _range_disjoint(
-                            rng[0], rng[1], lo, hi, ctype
-                        )
-                    ):
-                        return None
-        try:
-            _commit(table, latest + 1, conflict.actions)
-        except RuntimeError as exc:
-            if not _is_commit_conflict(exc):
-                raise
-            continue  # yet another winner: re-validate the new commits
-        out = dict(conflict.result)
-        out["version"] = latest + 1
-        return out
-    return None
-
-
 def merge_cow_deltalog_with_retry(
     spark: SparkSession,
     table: str,
@@ -2359,27 +2298,11 @@ def merge_cow_deltalog_with_retry(
     the full recompute exactly as before. The returned dict's
     ``merge_computations`` counts how many times the merge itself ran
     (1 = the reconciliation worked or nobody raced)."""
-    computations = 0
-    last: RuntimeError | None = None
-    for _ in range(max_retries + 1):
-        try:
-            computations += 1
-            out = merge_cow_deltalog(spark, table, source, on, **merge_kwargs)
-            out["merge_computations"] = computations
-            return out
-        except DeltaCommitConflict as conflict:
-            out = _try_recommit_disjoint(conflict)
-            if out is not None:
-                out["merge_computations"] = computations
-                return out
-            last = conflict  # overlapping: recompute on the new snapshot
-        except RuntimeError as exc:
-            if not _is_commit_conflict(exc):
-                raise
-            last = exc
-    raise RuntimeError(
-        f"delta commit lost {max_retries + 1} optimistic-concurrency races"
-    ) from last
+    return _occ_retry(
+        lambda: merge_cow_deltalog(spark, table, source, on, **merge_kwargs),
+        max_retries,
+        count_key="merge_computations",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -3337,27 +3260,44 @@ def merge_dim_deltalog(
             if not _is_commit_conflict(exc):
                 raise
             # a racing writer took the version: surface the loser's
-            # keyed read set (its source key band + referenced paths +
-            # the pinned snapshot's per-file key ranges) so the retry
-            # layer can RECONCILE a band-disjoint winner instead of
-            # recomputing the merge (r13, VERDICT r12 item 7)
-            raise DeltaCommitConflict(
-                table=table,
-                attempted_version=pinned + 1,
-                actions=actions,
-                read_months=(),
-                result=result,
-                key_band=key_band,
-                key_ctype=(
-                    ttypes[on[0]].simpleString() if on[0] in ttypes else None
-                ),
-                read_paths=changed_files,
-                snapshot_key_ranges={
+            # keyed read set as a predicate so the retry layer can
+            # RECONCILE a band-disjoint winner instead of recomputing
+            # the merge (r13, VERDICT r12 item 7); no band, no proof
+            key_disjoint = None
+            if key_band is not None:
+                col, lo, hi = key_band
+                refs = set(changed_files)
+                # per-file key ranges: the pinned snapshot's, grown by
+                # earlier winner adds (a later winner may remove them)
+                ranges = {
                     p: rng
                     for p, a in active.items()
-                    if key_band is not None
-                    and (rng := _add_key_range(a, key_band[0])) is not None
-                },
+                    if (rng := _add_key_range(a, col)) is not None
+                }
+
+                def key_disjoint(kind: str, body: dict) -> bool:
+                    # a winner touching the band — adding band rows or
+                    # deleting them (flipping the loser's match/insert
+                    # decisions) — or any path the loser references,
+                    # overlaps; a statless footprint is unknowable
+                    path = body["path"]
+                    rng = (
+                        _add_key_range(body, col)
+                        if kind == "add"
+                        else ranges.get(path)
+                    )
+                    if (
+                        path in refs
+                        or rng is None
+                        or not _range_disjoint(rng[0], rng[1], lo, hi, pk_type)
+                    ):
+                        return False
+                    if kind == "add":
+                        ranges[path] = rng
+                    return True
+
+            raise DeltaCommitConflict(
+                table, pinned + 1, actions, result, key_disjoint
             ) from exc
         return result
     finally:
@@ -4300,27 +4240,11 @@ def merge_dim_deltalog_with_retry(
     version without recomputing the diff; overlapping or unverifiable
     winners recompute exactly as before. ``merge_computations`` counts
     how many times the diff itself ran."""
-    computations = 0
-    last: RuntimeError | None = None
-    for _ in range(max_retries + 1):
-        try:
-            computations += 1
-            out = merge_dim_deltalog(spark, table, source, on, **merge_kwargs)
-            out["merge_computations"] = computations
-            return out
-        except DeltaCommitConflict as conflict:
-            out = _try_recommit_disjoint_keys(conflict)
-            if out is not None:
-                out["merge_computations"] = computations
-                return out
-            last = conflict  # overlapping: recompute on the new snapshot
-        except RuntimeError as exc:
-            if not _is_commit_conflict(exc):
-                raise
-            last = exc
-    raise RuntimeError(
-        f"delta commit lost {max_retries + 1} optimistic-concurrency races"
-    ) from last
+    return _occ_retry(
+        lambda: merge_dim_deltalog(spark, table, source, on, **merge_kwargs),
+        max_retries,
+        count_key="merge_computations",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4768,20 +4692,27 @@ def publish_set_deltalog(
     _coord0 = os.path.join(base_dir, _SET_DIR)
     observed_set_v = (_versions(_coord0) or [-1])[-1]
 
-    def _maybe_optimize(name: str, spark_s, tpath: str, version: int) -> int:
-        """Month-close maintenance scoped to OUR just-committed version
-        (require_version); a version-number collision with an
-        interleaved writer is swallowed — either way the set pins OUR
-        write, never a racing publisher's data."""
+    def _pinned_maintenance(maintain, version: int) -> int:
+        """Run ``maintain(require_version)`` scoped to OUR just-committed
+        version; a version-number collision with an interleaved writer
+        is swallowed and keeps ``version`` — either way the set pins
+        OUR write, never a racing publisher's data."""
         try:
-            res = optimize_delta(
-                spark_s, tpath, require_version=version, **opts[name]
-            )
+            res = maintain(version)
         except RuntimeError as exc:
             if not _is_commit_conflict(exc):
                 raise
-            res = {"version": None}
+            return version
         return res["version"] if res["version"] is not None else version
+
+    def _maybe_optimize(name: str, spark_s, tpath: str, version: int) -> int:
+        """Month-close OPTIMIZE, pinned like every maintenance step."""
+        return _pinned_maintenance(
+            lambda v: optimize_delta(
+                spark_s, tpath, require_version=v, **opts[name]
+            ),
+            version,
+        )
 
     def _publish_incremental(name: str, df: DataFrame) -> int:
         from etl_loading_scripts_spark.operators.cow import (
@@ -4979,34 +4910,26 @@ def publish_set_deltalog(
             ):
                 # metadata-only fraction check; the purge rewrites ONLY
                 # DV-carrying files (small_file_bytes=0 disables the
-                # packing leg) and is scoped to OUR version — a racing
-                # writer's collision skips it, like _maybe_optimize
-                try:
-                    r2 = optimize_delta(
+                # packing leg), pinned like _maybe_optimize
+                v = _pinned_maintenance(
+                    lambda rv: optimize_delta(
                         df.sparkSession, tpath, small_file_bytes=0,
-                        include_dv_files=True, require_version=v,
-                    )
-                    if r2["version"] is not None:
-                        v = r2["version"]
-                except RuntimeError as exc:
-                    if not _is_commit_conflict(exc):
-                        raise
+                        include_dv_files=True, require_version=rv,
+                    ),
+                    v,
+                )
             if cluster_by is not None:
                 # metadata-only drift audit; the rewrite fires only
-                # past the threshold, scoped to OUR version — a racing
-                # writer's collision skips it, like the DV purge
-                try:
-                    r3 = maintain_clustering_delta(
+                # past the threshold, pinned like the DV purge
+                v = _pinned_maintenance(
+                    lambda rv: maintain_clustering_delta(
                         df.sparkSession, tpath, cluster_by,
                         depth_threshold=cluster_depth_threshold,
-                        require_version=v,
+                        require_version=rv,
                         target_file_rows=cluster_target_file_rows,
-                    )
-                    if r3["version"] is not None:
-                        v = r3["version"]
-                except RuntimeError as exc:
-                    if not _is_commit_conflict(exc):
-                        raise
+                    ),
+                    v,
+                )
             return v
         src = df
         if window is not None:
@@ -7125,8 +7048,8 @@ def optimize_delta(
     cadence); ``zorder_by`` additionally Z-ORDERS the rewritten rows
     (see :func:`_zorder_col`) so per-file min/max stats become tight on
     EVERY named column and log-level stats skipping prunes
-    multi-dimensional range reads — measured in
-    ``tools/bench_zorder.py``.
+    multi-dimensional range reads — measured in SCALING.md's
+    "Round-8 addendum: measured Z-ORDER effect at sf0.1".
 
     Scale: reads only the small files (O(debris), not O(table)),
     shuffles once (repartition or range-by-z), and commits O(touched)

@@ -19,6 +19,7 @@ import os
 from contextlib import contextmanager
 import tempfile
 import uuid
+from urllib.parse import urlparse
 
 
 def stream_source_dir(src: str, prefix: str = "events_stream", unique: bool = False) -> str:
@@ -81,7 +82,15 @@ def derived_state_partitions(
     production session's throughput-sized setting stays the ceiling,
     so this only ever shrinks the waste, never fights the operator's
     sizing. Restart-safe: Spark pins a checkpoint's state partition
-    count from the checkpoint itself, ignoring later session values."""
+    count from the checkpoint itself, ignoring later session values.
+
+    A source on non-local storage (any URI scheme but ``file``:
+    ``s3a://``, ``hdfs://``, ...) can't be sized from here; rather than
+    read as 0 bytes and get the floor, the stream keeps the session's
+    configured shuffle partitions."""
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if any(urlparse(s).scheme not in ("", "file") for s in sources):
+        return cur
     total = 0
     for s in sources:
         if os.path.isdir(s):
@@ -93,7 +102,6 @@ def derived_state_partitions(
                 )
         elif os.path.exists(s):
             total += os.path.getsize(s)
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(min(floor, cur), min(cur, -(-total // target_bytes)))
 
 

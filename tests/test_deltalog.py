@@ -1375,6 +1375,101 @@ def test_overlapping_month_conflict_recomputes(spark, tmp_path):
     assert got == {1: 77.0, 2: 99.0}  # neither merge lost
 
 
+@pytest.mark.parametrize("grain", ["month", "key"])
+def test_metadata_winner_forces_recompute(spark, tmp_path, grain):
+    """A winner that commits only a metaData (+ protocol) change — here
+    a CHECK constraint the loser's rows satisfy — touches no file, yet
+    the loser's staged actions were validated against the OLD metadata:
+    the shared disjointness walker must refuse the fast re-commit for
+    BOTH read-set grains and the merge recomputes on the new snapshot."""
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    d = str(tmp_path / f"meta_{grain}")
+    raced = []
+
+    def racer():
+        if not raced:
+            raced.append(1)
+            dl.add_check_constraint(spark, d, "sane", "amount > -100")
+
+    if grain == "month":
+        base = spark.createDataFrame(
+            [(1, 20240105, 10.0), (2, 20240210, 20.0), (3, 20240320, 30.0)],
+            "k long, datekey int, amount double",
+        ).withColumn("month", (F.col("datekey") / 100).cast("int"))
+        dl.write_delta_table(base, d, partition_by=["month"])
+        src = spark.createDataFrame(
+            [(1, 20240106, 77.0)], "k long, datekey int, amount double"
+        )
+        res = dl.merge_cow_deltalog_with_retry(
+            spark, d, src, on=["k"], _pre_commit_hook=racer
+        )
+        want = {1: 77.0, 2: 20.0, 3: 30.0}
+    else:
+        base = spark.range(800).select(
+            F.col("id").alias("k"), (F.col("id") * 10.0).alias("amount")
+        )
+        dl.write_delta_table(base.repartitionByRange(8, "k"), d)
+        src = spark.range(0, 20).select(
+            F.col("id").alias("k"), F.lit(-1.0).alias("amount")
+        )
+        res = dl.merge_dim_deltalog_with_retry(
+            spark, d, src, ["k"], _pre_commit_hook=racer
+        )
+        want = {k: (-1.0 if k < 20 else k * 10.0) for k in range(800)}
+    assert raced  # the racer really committed in between
+    assert res["merge_computations"] == 2  # recomputed, not re-committed
+    assert res["version"] == 2
+    got = {r.k: r.amount for r in dl.read_delta_table(spark, d).collect()}
+    assert got == want
+    meta = dl._meta_at(d, res["version"])
+    assert meta["configuration"]["delta.constraints.sane"] == "amount > -100"
+
+
+def test_composite_retry_fn_recomputes_instead_of_reconciling(spark, tmp_path):
+    """_occ_retry fast-recommits only an fn that IS the merge op: a
+    composite fn that post-processes a nested merge's result (the
+    apply_changes shape) must re-run even against a band-disjoint
+    winner — a reconciled merge result would skip the fn's own work."""
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    d = str(tmp_path / "composite")
+    base = spark.range(800).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    dl.write_delta_table(base.repartitionByRange(8, "k"), d)
+    raced = []
+
+    def racer():
+        if not raced:
+            raced.append(1)
+            dl.merge_dim_deltalog(
+                spark, d,
+                spark.range(700, 720).select(
+                    F.col("id").alias("k"), F.lit(-2).cast("long").alias("v")
+                ),
+                ["k"],
+            )
+
+    calls = []
+
+    def composite():
+        calls.append(1)
+        out = dl.merge_dim_deltalog(
+            spark, d,
+            spark.range(0, 20).select(
+                F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
+            ),
+            ["k"], _pre_commit_hook=racer,
+        )
+        return {**out, "post_processed": True}
+
+    res = dl._occ_retry(composite, max_retries=3)
+    assert len(calls) == 2 and res["post_processed"]
+    got = {r.k: r.v for r in dl.read_delta_table(spark, d).collect()}
+    assert got[5] == -1 and got[710] == -2 and len(got) == 800
+
+
 @pytest.mark.soak
 def test_multiprocess_disjoint_cow_writers(spark, tmp_path):
     """TWO OS PROCESSES merge DISJOINT months concurrently

@@ -198,6 +198,23 @@ def test_stream_source_dir_repairs_dangling_symlink(tmp_path):
     assert u1 != u2
 
 
+def test_derived_state_partitions_non_local_source_keeps_session_setting():
+    """A source on non-local storage can't be sized locally: it
+    must keep the session's shuffle partitions, not read as 0 bytes and
+    silently drop to the floor. Pure path-string check, no I/O."""
+    from types import SimpleNamespace
+
+    from etl_loading_scripts_spark.streaming.source_util import (
+        derived_state_partitions,
+    )
+
+    spark = SimpleNamespace(conf={"spark.sql.shuffle.partitions": "37"})
+    assert derived_state_partitions(spark, "s3a://bucket/events") == 37
+    assert derived_state_partitions(spark, "hdfs://nn/events", floor=2) == 37
+    # a missing local path still sizes as 0 bytes -> the floor
+    assert derived_state_partitions(spark, "/nonexistent/events") == 4
+
+
 def test_stream_ewma_state_bounds(spark, sf_dir):
     """The recursive smoother stays inside each user's value envelope and
     counts every event exactly once (exactness vs the ordered fold is the

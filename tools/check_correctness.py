@@ -13,10 +13,17 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in, wherever it is run from —
+# in this process and in the Spark Python workers it launches
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb  # noqa: E402
 
